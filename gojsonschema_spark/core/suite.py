@@ -26,6 +26,7 @@ from .jsonvalue import parse_json
 __all__ = ["load_cases", "run_case_group", "iter_gate_files", "SuiteCase", "register_remotes"]
 
 SUITE_ROOT = "/root/reference/testdata"
+SUITE_ROOT = os.environ.get("GJS_SUITE_ROOT", SUITE_ROOT)
 REMOTE_BASE = "http://localhost:1234/"
 
 # optional files outside the reference's own gate that our engine also
@@ -65,6 +66,16 @@ def reference_expected(draft: str, rel: str, case) -> bool:
         (draft, rel, case.group, case.case), case.expected_valid)
 
 
+def require_suite(root: str = SUITE_ROOT) -> str:
+    """``root``, or FileNotFoundError naming it and GJS_SUITE_ROOT when
+    the fixture tree is absent."""
+    if not os.path.isdir(root):
+        raise FileNotFoundError(
+            f"JSON-Schema-Test-Suite fixtures not found at {root}; "
+            "set GJS_SUITE_ROOT to the suite's tests directory")
+    return root
+
+
 @dataclass
 class SuiteCase:
     draft: str
@@ -77,6 +88,7 @@ class SuiteCase:
 
 
 def iter_gate_files(root: str = SUITE_ROOT, include_extra: bool = True):
+    require_suite(root)
     for draft in ("draft4", "draft6", "draft7"):
         ddir = os.path.join(root, draft)
         for name in sorted(os.listdir(ddir)):
@@ -115,7 +127,7 @@ def load_cases(root: str = SUITE_ROOT, include_extra: bool = True):
 
 def register_remotes(compiler: SchemaCompiler, root: str = SUITE_ROOT) -> None:
     """Pre-register testdata/remotes/** under http://localhost:1234/."""
-    rdir = os.path.join(root, "remotes")
+    rdir = os.path.join(require_suite(root), "remotes")
     for dirpath, _, files in os.walk(rdir):
         for name in files:
             if not name.endswith(".json"):

@@ -812,7 +812,9 @@ def _bpe_train_local(words: list, n_merges: int,
                         pair_words[p].discard(idx)
         # a full greedy pass removes every (a, b) adjacency, so the
         # merged pair's count must be exactly zero now (delta soundness)
-        assert (a, b) not in pair_counts
+        if (a, b) in pair_counts:
+            raise RuntimeError(
+                f"merged pair {(a, b)} still counted after its merge pass")
         pair_words.pop((a, b), None)
         for p in changed:
             n2 = pair_counts.get(p, 0)

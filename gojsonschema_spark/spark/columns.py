@@ -269,7 +269,8 @@ class ColumnPlanCompiler:
         pred = self._node(root)
         if self._frontier_hit:
             det = self._det_node(root)
-            assert det is not None, "frontier emitted but detector is empty"
+            if det is None:
+                raise RuntimeError("frontier emitted but detector is empty")
 
             def frontier(v: Column) -> Column:
                 return v.isNotNull() & _nn(det(v))
@@ -1086,7 +1087,8 @@ class ColumnPlanCompiler:
 def _frac_str(frac: Fraction) -> str:
     """Exact decimal string for a Fraction with power-of-10 denominator."""
     scaled = frac * 10**18
-    assert scaled.denominator == 1
+    if scaled.denominator != 1:
+        raise RuntimeError(f"{frac} has no exact 18-digit decimal form")
     neg = scaled.numerator < 0
     digits = str(abs(scaled.numerator)).rjust(19, "0")
     s = f"{digits[:-18]}.{digits[-18:]}"

@@ -9,6 +9,11 @@ Compile once on the driver, validate set-at-a-time over DataFrames:
 * fallback: schemas outside the Column subset run entirely on the
   interpreter UDF (same verdicts, exact semantics).
 
+A validator builds its pandas UDFs at construction and its Column DAG on
+first use, then reuses both; ``_verdict`` composes the valid bit from them
+for batch, per-kind and streaming validation alike. VARIANT input goes to
+``validate_variant``.
+
 Typical use::
 
     v = SparkValidator({"type": "object", "required": ["url"], ...}, draft="draft7")
@@ -17,6 +22,8 @@ Typical use::
 """
 
 from __future__ import annotations
+
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -33,6 +40,12 @@ def _barrier(df: DataFrame, name: str, expr: Column) -> DataFrame:
     return df.select("*", F.explode(F.array(expr)).alias(name))
 
 
+def _explode_violations(bad: DataFrame, key_cols: list[str]) -> DataFrame:
+    """One row per (document, violation): ``key_cols`` + violation fields."""
+    return (bad.select(*key_cols, F.explode("violations").alias("v"))
+               .select(*key_cols, "v.*"))
+
+
 class SparkValidator:
     def __init__(self, schema, draft=Draft.HYBRID, auto_detect: bool = True,
                  validate_schema: bool = False, compiler: SchemaCompiler = None,
@@ -40,6 +53,10 @@ class SparkValidator:
         self.compiler = compiler or SchemaCompiler(
             draft=draft, auto_detect=auto_detect, validate_schema=validate_schema)
         self.compiled = self.compiler.compile(schema)
+        # pandas UDFs are plain Python objects until first applied
+        self._verdict_udf = make_verdict_udf(self.compiled, with_violations=False)
+        self._verdict_violations_udf = make_verdict_udf(self.compiled)
+        self._violations_udf = make_violations_udf(self.compiled)
         self.column_plan = None
         self.frontier_plan = None
         self.unsupported_reason = None
@@ -65,25 +82,45 @@ class SparkValidator:
     def uses_column_plan(self) -> bool:
         return self.column_plan is not None
 
-    # -- public API -----------------------------------------------------------
+    @cached_property
+    def _valid_bit(self) -> Column:
+        return self.column_plan(F.col("__gjs_v"))
 
-    def valid_column(self, variant_col: Column) -> Column:
-        """Pure-SQL 'valid' bit over a VARIANT column (column plan only).
+    @cached_property
+    def _deep_bit(self) -> Column:
+        return self.frontier_plan(F.col("__gjs_v"))
 
-        Raises for depth-unrolled cyclic schemas: their exact verdict needs
-        the hybrid deep-row fallback of :meth:`validate_json`."""
+    def _verdict(self, df: DataFrame, doc: Column, route: Column | None = None,
+                 deep_col: str = "__gjs_deep") -> tuple[DataFrame, Column]:
+        """(df, valid bit of ``doc``) over the parsed ``__gjs_v`` attribute:
+        the SQL plan, with rows nesting past a hybrid plan's $ref unroll (or
+        every row, without a plan) re-verdicted by the interpreter UDF, whose
+        input is NULL outside ``route`` so Arrow ships only routed rows. The
+        caller drops ``deep_col``, the barriered frontier detector."""
         if self.column_plan is None:
-            raise UnsupportedSchema(self.unsupported_reason or "no column plan")
-        if self.frontier_plan is not None:
-            raise UnsupportedSchema(
-                "cyclic $ref unroll frontier: use validate_json (hybrid)")
-        return self.column_plan(variant_col)
+            return df, self._verdict_udf(
+                doc if route is None else F.when(route, doc))["valid"]
+        if self.frontier_plan is None:
+            return df, self._valid_bit
+        df = _barrier(df, deep_col, self._deep_bit if route is None
+                      else route & self._deep_bit)
+        deep = F.col(deep_col)
+        return df, (F.when(deep, self._verdict_udf(F.when(deep, doc))["valid"])
+                     .otherwise(self._valid_bit))
+
+    # -- public API -----------------------------------------------------------
 
     def validate_json(self, df: DataFrame, doc_col: str,
                       valid_col: str = "valid",
                       violations_col: str | None = "violations") -> DataFrame:
         """Validate a JSON-string column; appends `valid` (+ `violations`)."""
         doc = F.col(doc_col)
+        if self.column_plan is None and violations_col:
+            # one interpreter pass yields both the bit and the violations
+            df = df.withColumn("__verdict__", self._verdict_violations_udf(doc))
+            return (df.withColumn(valid_col, F.col("__verdict__.valid"))
+                      .withColumn(violations_col, F.col("__verdict__.violations"))
+                      .drop("__verdict__"))
         if self.column_plan is not None:
             # explode(array(x)) is a Generate node: a deliberate projection
             # barrier so (a) the variant parse materializes once instead of
@@ -91,45 +128,29 @@ class SparkValidator:
             # pass-2 UDF receives the `valid` ATTRIBUTE, not a re-evaluated
             # (interpreted, non-codegen) copy of the whole predicate.
             df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-            if self.frontier_plan is None:
-                df = df.withColumn(valid_col, self.column_plan(F.col("__gjs_v")))
-            else:
-                # hybrid: rows nesting past the compile-time $ref unroll are
-                # re-verdicted by the exact interpreter; the UDF input is
-                # masked to NULL for shallow rows so Arrow ships (and Python
-                # parses) only the deep tail
-                df = _barrier(df, "__gjs_deep",
-                              self.frontier_plan(F.col("__gjs_v")))
-                verdict = make_verdict_udf(self.compiled, with_violations=False)
-                deep_doc = F.when(F.col("__gjs_deep"), doc)
-                df = df.withColumn(
-                    valid_col,
-                    F.when(F.col("__gjs_deep"), verdict(deep_doc)["valid"])
-                     .otherwise(self.column_plan(F.col("__gjs_v"))))
-                df = df.drop("__gjs_deep")
-            if violations_col:
-                df = _barrier(df, "__gjs_valid", F.col(valid_col))
-                elaborate = make_violations_udf(self.compiled)
-                # mask the payload for valid rows: Arrow then ships nulls
-                # instead of document bodies for the (majority) happy path
-                masked = F.when(~F.col("__gjs_valid"), doc)
-                df = df.withColumn(violations_col,
-                                   elaborate(masked, F.col("__gjs_valid")))
-                df = df.drop("__gjs_valid")
-            return df.drop("__gjs_v")
-        verdict = make_verdict_udf(self.compiled,
-                                   with_violations=bool(violations_col))
-        tmp = "__verdict__"
-        df = df.withColumn(tmp, verdict(doc))
-        df = df.withColumn(valid_col, F.col(f"{tmp}.valid"))
+        df, bit = self._verdict(df, doc)
+        df = df.withColumn(valid_col, bit).drop("__gjs_deep")
         if violations_col:
-            df = df.withColumn(violations_col, F.col(f"{tmp}.violations"))
-        return df.drop(tmp)
+            df = _barrier(df, "__gjs_valid", F.col(valid_col))
+            # mask the payload for valid rows: Arrow then ships nulls
+            # instead of document bodies for the (majority) happy path
+            masked = F.when(~F.col("__gjs_valid"), doc)
+            df = df.withColumn(violations_col,
+                               self._violations_udf(masked, F.col("__gjs_valid")))
+            df = df.drop("__gjs_valid")
+        return df.drop("__gjs_v")
 
     def validate_variant(self, df: DataFrame, variant_col: str,
                          valid_col: str = "valid") -> DataFrame:
-        """Validate an existing VARIANT column on the pure-SQL path."""
-        return df.withColumn(valid_col, self.valid_column(F.col(variant_col)))
+        """Validate an existing VARIANT column on the pure-SQL path (raises
+        where the exact verdict needs the interpreter: use validate_json)."""
+        if self.column_plan is None:
+            raise UnsupportedSchema(self.unsupported_reason or "no column plan")
+        if self.frontier_plan is not None:
+            raise UnsupportedSchema(
+                "cyclic $ref unroll frontier: use validate_json (hybrid)")
+        return (df.withColumn("__gjs_v", F.col(variant_col))
+                  .withColumn(valid_col, self._valid_bit).drop("__gjs_v"))
 
     def violations_table(self, df: DataFrame, doc_col: str,
                          key_cols: list[str]) -> DataFrame:
@@ -150,19 +171,12 @@ class SparkValidator:
             # stays in the CSE'd Project and the filter tests one boolean
             # attribute.
             out = _barrier(out, "__gjs_vbit", F.col("valid"))
-            elaborate = make_violations_udf(self.compiled)
             bad = (out.filter(~F.col("__gjs_vbit")).drop("__gjs_vbit")
                       .withColumn("violations",
-                                  elaborate(F.col(doc_col), F.lit(False))))
+                                  self._violations_udf(F.col(doc_col), F.lit(False))))
         else:
             bad = self.validate_json(df, doc_col).filter(~F.col("valid"))
-        return (bad.select(*key_cols, F.explode("violations").alias("v"))
-                   .select(*key_cols,
-                           F.col("v.field").alias("field"),
-                           F.col("v.keyword").alias("keyword"),
-                           F.col("v.message").alias("message"),
-                           F.col("v.value").alias("value"),
-                           F.col("v.details").alias("details")))
+        return _explode_violations(bad, key_cols)
 
 
 class MultiSchemaValidator:
@@ -193,26 +207,18 @@ class MultiSchemaValidator:
                       valid_col: str = "valid") -> DataFrame:
         doc, kind = F.col(doc_col), F.col(kind_col)
         df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-        var = F.col("__gjs_v")
-        expr = None
-        for k, v in self.validators.items():
-            if v.column_plan is not None and v.frontier_plan is None:
-                branch = v.column_plan(var)
-            elif v.column_plan is not None:
-                verdict = make_verdict_udf(v.compiled, with_violations=False)
-                deep = v.frontier_plan(var)
-                branch = (F.when(deep, verdict(F.when(deep & (kind == k), doc))["valid"])
-                           .otherwise(v.column_plan(var)))
-            else:
-                verdict = make_verdict_udf(v.compiled, with_violations=False)
-                branch = verdict(F.when(kind == k, doc))["valid"]
+        expr, deep_cols = None, []
+        for i, (k, v) in enumerate(self.validators.items()):
+            deep_cols.append(f"__gjs_deep{i}")
+            df, branch = v._verdict(df, doc, route=kind == k,
+                                    deep_col=deep_cols[-1])
             expr = (F.when(kind == F.lit(k), branch) if expr is None
                     else expr.when(kind == F.lit(k), branch))
         if expr is None:
             expr = F.lit(None).cast("boolean")
         if self.on_unknown != "null":
             expr = expr.otherwise(F.lit(self.on_unknown == "valid"))
-        return df.withColumn(valid_col, expr).drop("__gjs_v")
+        return df.withColumn(valid_col, expr).drop("__gjs_v", *deep_cols)
 
     def violations_table(self, df: DataFrame, doc_col: str, kind_col: str,
                          key_cols: list[str]) -> DataFrame:
@@ -228,9 +234,8 @@ class MultiSchemaValidator:
                           & ~F.col("__gjs_vbit")).drop("__gjs_vbit"))
         doc, kind = F.col(doc_col), F.col(kind_col)
         expr = None
-        for k in self.validators:
-            elaborate = make_violations_udf(self.validators[k].compiled)
-            branch = elaborate(F.when(kind == k, doc), F.lit(False))
+        for k, v in self.validators.items():
+            branch = v._violations_udf(F.when(kind == k, doc), F.lit(False))
             expr = (F.when(kind == F.lit(k), branch) if expr is None
                     else expr.when(kind == F.lit(k), branch))
         unknown_row = F.array(F.struct(
@@ -243,11 +248,5 @@ class MultiSchemaValidator:
             F.create_map().cast("map<string,string>").alias("details")))
         expr = (unknown_row if expr is None else expr.otherwise(unknown_row))
         bad = bad.withColumn("violations", expr)
-        return (bad.select(*key_cols, kind.alias("kind"),
-                           F.explode("violations").alias("v"))
-                   .select(*key_cols, "kind",
-                           F.col("v.field").alias("field"),
-                           F.col("v.keyword").alias("keyword"),
-                           F.col("v.message").alias("message"),
-                           F.col("v.value").alias("value"),
-                           F.col("v.details").alias("details")))
+        return _explode_violations(bad.withColumn("kind", kind),
+                                   [*key_cols, "kind"])

@@ -3,9 +3,9 @@
 The reference is single-document/synchronous (SURVEY.md §2.7: no streaming
 exists there), and the north-rule resumability is deliberately batch
 (per-bucket checkpoints, plans/checkpointed.py). This module makes the
-same compiled plans usable over streams: the pure-SQL column plan is a
-narrow stateless projection, so it applies to a streaming DataFrame
-unchanged — watermarking/windowed rollups compose downstream.
+same compiled plans usable over streams: batch validation is a narrow
+stateless projection, so it applies to a streaming DataFrame unchanged —
+watermarking/windowed rollups compose downstream.
 
 Typical use::
 
@@ -35,19 +35,10 @@ def validate_stream(stream_df: DataFrame, validator: SparkValidator,
                     doc_col: str, valid_col: str = "valid") -> DataFrame:
     """Append the `valid` bit to a streaming DataFrame (stateless).
 
-    Hybrid plans (``frontier_plan`` set: cyclic $ref unroll, composite
-    uniqueItems, UDF formats in HOF positions) compile to an optimistic
-    SQL plan whose exactness depends on the interpreter re-verdicting
-    frontier rows — validate_json's masking logic is stateless and
-    stream-safe, so those validators route through it rather than
-    applying the optimistic column plan alone (which would silently mark
-    frontier rows valid)."""
-    if validator.column_plan is None or validator.frontier_plan is not None:
-        # interpreter / hybrid masking paths are stateless projections too
-        return validator.validate_json(stream_df, doc_col, valid_col,
-                                       violations_col=None)
-    v = F.try_parse_json(F.col(doc_col))
-    return stream_df.withColumn(valid_col, validator.column_plan(v))
+    Streams share the batch path: its parse barrier, SQL plan and masked
+    interpreter fallback are all stateless projections."""
+    return validator.validate_json(stream_df, doc_col, valid_col,
+                                   violations_col=None)
 
 
 def validate_stream_to_parquet(stream_df: DataFrame,

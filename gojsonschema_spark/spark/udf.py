@@ -122,30 +122,33 @@ def _violation_rows(result) -> list[dict]:
     return rows
 
 
+def _check(compiled: CompiledSchema, doc: str, with_violations: bool):
+    """(valid, violation rows) for one JSON string; unparseable and too-deep
+    documents get their fixed rows even when ``with_violations`` is off."""
+    if doc is None:
+        return False, _PARSE_FAILED
+    try:
+        instance = _loads(doc)
+    except (ValueError, RecursionError):
+        return False, _PARSE_FAILED
+    try:
+        result = validate_document(compiled, instance)
+    except RecursionError:
+        return False, _RECURSION_LIMIT
+    if result.valid():
+        return True, []
+    return False, _violation_rows(result) if with_violations else []
+
+
 def make_verdict_udf(compiled: CompiledSchema, with_violations: bool = True):
     """pandas UDF: json string -> struct(valid, violations)."""
-
-    def run(doc: str):
-        if doc is None:
-            return False, _PARSE_FAILED
-        try:
-            instance = _loads(doc)
-        except (ValueError, RecursionError):
-            return False, _PARSE_FAILED
-        try:
-            result = validate_document(compiled, instance)
-        except RecursionError:
-            return False, _RECURSION_LIMIT
-        if result.valid():
-            return True, []
-        return False, _violation_rows(result) if with_violations else []
 
     @pandas_udf(VERDICT_SCHEMA)
     def verdict(docs: pd.Series) -> pd.DataFrame:
         _raise_limit()
         out_valid, out_viol = [], []
         for doc in docs:
-            ok, viol = run(doc)
+            ok, viol = _check(compiled, doc, with_violations)
             out_valid.append(ok)
             out_viol.append(viol)
         return pd.DataFrame({"valid": out_valid, "violations": out_viol})
@@ -165,25 +168,11 @@ def make_violations_udf(compiled: CompiledSchema):
     this pass is proportional to the invalid subset.
     """
 
-    def run(doc: str, valid) -> list[dict]:
-        if valid:
-            return []
-        if doc is None:
-            return _PARSE_FAILED
-        try:
-            instance = _loads(doc)
-        except (ValueError, RecursionError):
-            return _PARSE_FAILED
-        try:
-            result = validate_document(compiled, instance)
-        except RecursionError:
-            return _RECURSION_LIMIT
-        return _violation_rows(result)
-
     @pandas_udf(VIOLATION_SCHEMA)
     def violations(docs: pd.Series, valid: pd.Series) -> pd.Series:
         _raise_limit()
-        return pd.Series([run(d, v) for d, v in zip(docs, valid)])
+        return pd.Series([[] if v else _check(compiled, d, True)[1]
+                          for d, v in zip(docs, valid)])
 
     # see make_verdict_udf: prevents Catalyst from cloning the eval node
     return violations.asNondeterministic()

@@ -92,6 +92,48 @@ def test_two_pass_violations_python_sees_valid_attribute(spark, pages_path):
     assert "parseJson" not in arrow_lines[0]
 
 
+def test_plan_built_once_per_validator(spark, monkeypatch):
+    """A validator builds its Column DAG and UDFs once: a second
+    violations_table call on a recursive-$ref (hybrid) schema reuses
+    them instead of rebuilding the DAG node by node through py4j (~10k
+    round trips for this schema). What remains is the schema-independent
+    DataFrame plumbing (~400 calls on PySpark 4.1)."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    tree = {"definitions": {"node": {
+        "type": "object", "required": ["name", "value"],
+        "properties": {
+            "name": {"type": "string", "minLength": 1, "maxLength": 32},
+            "value": {"type": "integer", "minimum": 0, "maximum": 1000},
+            "tags": {"type": "array", "maxItems": 4,
+                     "items": {"type": "string", "pattern": "^[a-z]+$"}},
+            "children": {"type": "array", "maxItems": 4,
+                         "items": {"$ref": "#/definitions/node"}}},
+        "additionalProperties": False}},
+        "$ref": "#/definitions/node"}
+    v = SparkValidator(tree)
+    assert v.frontier_plan is not None
+    df = spark.createDataFrame([(1, '{"name": "a", "value": 1}')],
+                               "doc_id long, doc string")
+    v.violations_table(df, "doc", ["doc_id"])
+    gc.collect()
+    # count this thread only: other threads release JVM objects meanwhile
+    me, calls = threading.get_ident(), []
+    send = ClientServerConnection.send_command
+
+    def counting(self, *a, **k):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    v.violations_table(df, "doc", ["doc_id"])
+    assert len(calls) < 1000, f"{len(calls)} py4j calls on a reused validator"
+
+
 def test_drift_single_scan_per_side(spark, pages_path):
     """categorical_drift_kl must read each side ONCE: the histogram total
     comes from the grouped rows, not a second count() pass."""

@@ -10,6 +10,7 @@ pre-registration. Driver-only (no Spark session needed): executors never
 fetch schemas.
 """
 
+import os
 import threading
 from functools import partial
 from http.server import SimpleHTTPRequestHandler, ThreadingHTTPServer
@@ -19,10 +20,10 @@ import pytest
 from gojsonschema_spark.core.compiler import SchemaCompiler
 from gojsonschema_spark.core.errors import SchemaCompileError
 from gojsonschema_spark.core.jsonvalue import parse_json
+from gojsonschema_spark.core.suite import SUITE_ROOT, require_suite
 from gojsonschema_spark.io.loaders import http_fetcher
 
-REMOTES_DIR = "/root/reference/testdata/remotes"
-SUITE_ROOT = "/root/reference/testdata"
+REMOTES_DIR = os.path.join(SUITE_ROOT, "remotes")
 
 
 class _CountingHandler(SimpleHTTPRequestHandler):
@@ -48,6 +49,7 @@ def remote_server():
 
 
 def test_fetcher_resolves_unregistered_remote(remote_server):
+    require_suite()
     base, hits = remote_server
     compiler = SchemaCompiler(draft="draft7", fetcher=http_fetcher())
     compiled = compiler.compile({"$ref": base + "integer.json"})
@@ -56,6 +58,7 @@ def test_fetcher_resolves_unregistered_remote(remote_server):
 
 
 def test_fetcher_caches_per_compiler(remote_server):
+    require_suite()
     base, hits = remote_server
     compiler = SchemaCompiler(draft="draft7", fetcher=http_fetcher())
     before = len(hits)
@@ -94,6 +97,7 @@ def test_fetcher_composes_with_spark_engine(remote_server, spark):
     driver-side compile; executors only see the compiled graph."""
     from gojsonschema_spark.spark.engine import SparkValidator
 
+    require_suite()
     base, _ = remote_server
     compiler = SchemaCompiler(draft="draft7", fetcher=http_fetcher())
     v = SparkValidator(
@@ -114,7 +118,8 @@ def test_refremote_suite_through_fetch_path(remote_server, draft):
     itself contains no absolute localhost refs, so rebasing the
     top-level schemas is exact."""
     base, _ = remote_server
-    with open(f"{SUITE_ROOT}/{draft}/refRemote.json", encoding="utf-8") as f:
+    with open(os.path.join(require_suite(), draft, "refRemote.json"),
+              encoding="utf-8") as f:
         text = f.read().replace("http://localhost:1234/", base)
     groups = parse_json(text)
     for group in groups:

@@ -596,3 +596,13 @@ def test_negative_zero_residual(spark):
     # double-typed pair [0,-0e0] happens to agree
     assert got == {"[0, -0]": False, "[0.0, -0.0]": False,
                    "[0, -0e0]": True, "[-0e0, -0.0]": True}
+
+
+def test_frac_str_rejects_inexact_fraction():
+    """The exact-decimal invariant raises, also under ``python -O``."""
+    from fractions import Fraction
+
+    from gojsonschema_spark.spark.columns import _frac_str
+
+    with pytest.raises(RuntimeError):
+        _frac_str(Fraction(1, 3))
